@@ -438,10 +438,9 @@ def _bench_harmonize(spark, harmonize, release_caches, staging_root, sources,
         spark.sparkContext.setJobDescription(f"bench:{key}")
         for _ in range(runs):  # best-of-2, same as the headline queries
             # the harmonize family is the IO-heavy tail of the run: its
-            # prep (staging synth, bucketed tables) and run 1's own
-            # writes (bucket2 materialization) leave GBs of dirty pages
-            # — drain the writeback backlog before EACH timed run so
-            # they can't stall it (the BENCH_r08 phantom)
+            # prep (staging synth, bucketed tables) leaves GBs of dirty
+            # pages — drain the writeback backlog before EACH timed run
+            # so they can't stall it (the BENCH_r08 phantom)
             _settle_io()
             t0 = time.time()
             res = harmonize(spark, staging_root, sources, **harmonize_kwargs)
@@ -451,10 +450,6 @@ def _bench_harmonize(spark, harmonize, release_caches, staging_root, sources,
             best = dt if best is None else min(best, dt)
             timings[key] = round(best, 3)  # survives a run-2 failure
             res.unpersist()
-            # reclaim the bucket2 materialization (no-op otherwise):
-            # without this each bucket2 run leaks a nonce'd table + a
-            # full fact copy under the scratch dir (r8 ADVICE)
-            res.drop_bucket2()
             release_caches()
     except Exception as e:
         errors[key] = f"{type(e).__name__}: {e}"[:300]
@@ -507,9 +502,7 @@ def main() -> None:
     # flagship: the harmonize job end-to-end (scan -> canonicalize ->
     # content ids -> re-key joins -> global aid -> invariant checks).
     # Both entries honour SPARK_GRAFT_BENCH_ONLY like the headline list.
-    hm_wanted = _selected(
-        ["harmonize_e2e", "harmonize_e2e_bucket", "harmonize_e2e_bucket2"]
-    )
+    hm_wanted = _selected(["harmonize_e2e", "harmonize_e2e_bucket"])
     staging_root = f"/tmp/chemharmony_bench_staging_sf{sf}"
     sources = None
     if hm_wanted:
@@ -525,26 +518,19 @@ def main() -> None:
             timings, errors, "harmonize_e2e", cals=cals, ios=ios,
             loads=loads, runs=runs)
         hm_runners["harmonize_e2e"]()
-    bucket_entries = [k for k in ("harmonize_e2e_bucket",
-                                  "harmonize_e2e_bucket2") if k in hm_wanted]
-    if sources and bucket_entries:
+    if sources and "harmonize_e2e_bucket" in hm_wanted:
         # the designated 100x path: bucketed staging tables +
         # rekey_strategy='bucket' — the sid re-key join reads the fact
         # side straight off the bucketed scan (zero fact-side exchange,
-        # proven in tests/test_bucketing.py e2e). 'bucket2' additionally
-        # materializes the sid-rekeyed fact bucketed by (source, pid) so
-        # the pid join's fact side is zero-exchange too — the bench entry
-        # records whether that write+read beats the one in-flight shuffle
-        # it replaces (SCALE.md "bucketed harmonize").
+        # proven in tests/test_bucketing.py e2e).
         try:
             tables = _prepare_bucketed_staging(spark, staging_root,
                                                sources, sf)
         except Exception as e:
             tables = None
-            msg = f"bucket prep {type(e).__name__}: {e}"[:300]
-            for key in bucket_entries:
-                errors[key] = msg
-        if tables and "harmonize_e2e_bucket" in bucket_entries:
+            errors["harmonize_e2e_bucket"] = (
+                f"bucket prep {type(e).__name__}: {e}"[:300])
+        if tables:
             hm_runners["harmonize_e2e_bucket"] = lambda runs=2: _bench_harmonize(
                 spark, harmonize, release_caches, staging_root, sources,
                 timings, errors, "harmonize_e2e_bucket",
@@ -552,15 +538,6 @@ def main() -> None:
                 cals=cals, ios=ios, loads=loads, runs=runs,
             )
             hm_runners["harmonize_e2e_bucket"]()
-        if tables and "harmonize_e2e_bucket2" in bucket_entries:
-            hm_runners["harmonize_e2e_bucket2"] = lambda runs=2: _bench_harmonize(
-                spark, harmonize, release_caches, staging_root, sources,
-                timings, errors, "harmonize_e2e_bucket2",
-                rekey_strategy="bucket2", staging_tables=tables,
-                bucket2_dir=f"{staging_root}_b2_scratch",
-                cals=cals, ios=ios, loads=loads, runs=runs,
-            )
-            hm_runners["harmonize_e2e_bucket2"]()
 
     # --- act on the drift signals (r6 verdict task 4; bounded retry loop
     # r10, r9 verdict task 3) -------------------------------------------

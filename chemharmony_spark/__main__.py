@@ -21,15 +21,9 @@ def cmd_harmonize(spark, args) -> int:
     from chemharmony_spark.sources.writers import write_parquet
 
     sources = [s for s in args.sources.split(",") if s]
-    if args.rekey == "bucket2" and not args.bucket2_dir:
-        print("--rekey bucket2 requires --bucket2-dir (the directory the "
-              "sid-rekeyed intermediate is materialized under)",
-              file=sys.stderr)
-        return 2
     res = harmonize(spark, args.staging, sources,
                     scratch_dir=args.scratch or None,
-                    rekey_strategy=args.rekey,
-                    bucket2_dir=args.bucket2_dir or None)
+                    rekey_strategy=args.rekey)
     # partitioned by source (SURVEY §4): the per-source access pattern
     # dominates QA and re-integration reads (reference tests.py:18-30,
     # 80_harmonize.py:99) — a source-filtered read then touches exactly
@@ -41,10 +35,6 @@ def cmd_harmonize(spark, args) -> int:
         write_parquet(df, f"{args.out}/{name}.parquet",
                       partition_by=["source"])
         print(f"wrote {args.out}/{name}.parquet (partitioned by source)")
-    # the brick is written — the result is fully consumed, so reclaim the
-    # bucket2 materialization (no-op for auto/bucket) instead of leaking a
-    # nonce'd catalog table + data dir per invocation (r9)
-    res.drop_bucket2()
     return 0
 
 
@@ -78,19 +68,10 @@ def build_parser() -> argparse.ArgumentParser:
     h.add_argument("--out", required=True)
     h.add_argument("--scratch", default="")
     h.add_argument(
-        "--rekey", choices=("auto", "bucket", "bucket2"), default="auto",
+        "--rekey", choices=("auto", "bucket"), default="auto",
         help="re-key join strategy: auto = size-gated broadcast hint; "
              "bucket = shuffle-hash build (the 100x-scale path for id "
-             "maps that outgrow any broadcast); bucket2 = bucket plus a "
-             "materialized sid-rekeyed intermediate bucketed by "
-             "(source, pid) — zero in-flight fact exchanges in BOTH "
-             "re-keys (requires --bucket2-dir; measured NEGATIVE on a "
-             "single node, for shuffle-constrained deployments only)",
-    )
-    h.add_argument(
-        "--bucket2-dir", default="",
-        help="directory for bucket2's materialized intermediate "
-             "(required with --rekey bucket2)",
+             "maps that outgrow any broadcast)",
     )
     h.set_defaults(fn=cmd_harmonize)
 

@@ -1,5 +1,5 @@
 from chemharmony_spark.plans.harmonize import (  # noqa: F401
+    InvariantError,
     harmonize,
-    harmonize_bucket2_gc,
 )
 from chemharmony_spark.plans.labeler import magentic_labels  # noqa: F401

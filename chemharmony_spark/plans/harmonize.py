@@ -14,7 +14,7 @@ Dataflow (per 80_harmonize.py):
   5. smiles from inchi via deduped UDF + join back     (80:71-73)
   6. re-key activities on (source, local sid/pid)      (80:76-78)
   7. aid = md5(sid||pid||inchi||value), distinct       (80:81-84)
-  8. invariant asserts                                 (80:96-105)
+  8. invariant checks, raising InvariantError          (80:96-105)
 
 Scale design: the two re-key joins shuffle activities on (source, sid) then
 (source, pid). The id maps are dimension-sized relative to activities
@@ -46,24 +46,11 @@ from chemharmony_spark.functions.json_payload import canonicalize_json_udf
 from chemharmony_spark.sources.readers import read_staging_glob
 
 
-# per-process bucket2 invocation counter: combined with the pid it makes
-# every bucket2 materialization's table name + data path unique, so re-
-# invoking with the same bucket2_dir can never clobber a table an earlier
-# run's unconsumed lazy result still reads
-import itertools as _it
-
-_B2_COUNTER = _it.count()
-
-
-def _bucket2_n_buckets(spark) -> int:
-    """Bucket count for the bucket2 materialization: the session's shuffle
-    partitioning, falling back to defaultParallelism when the conf is
-    non-numeric (managed platforms expose values like "auto"; crashing the
-    bucket2 path before its write helps nobody)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
+class InvariantError(AssertionError):
+    """A harmonize data-quality gate failed (row floor, provenance, pid/data
+    bijection, referential integrity). Raised explicitly so ``python -O``
+    cannot strip the gate; subclasses AssertionError for callers that
+    already catch that."""
 
 
 @dataclass
@@ -71,105 +58,12 @@ class HarmonizeResult:
     substances: DataFrame
     properties: DataFrame
     activities: DataFrame
-    # set only by rekey_strategy='bucket2': the nonce'd catalog table the
-    # activities frame reads, and its data directory. Tracked so the caller
-    # can reclaim them (drop_bucket2) once the result is consumed — without
-    # this every bucket2 invocation leaks a metastore entry + a data dir
-    # for the session's lifetime (r8 ADVICE).
-    bucket2_table: str | None = None
-    bucket2_path: str | None = None
 
     def unpersist(self) -> None:
         """Release the caches taken out for the invariant suite. Frames stay
-        usable (recompute-on-reference); the bucket2 materialization, which
-        a recompute of ``activities`` would re-read, is NOT touched here —
-        call :meth:`drop_bucket2` when the result is fully consumed."""
+        usable (recompute-on-reference)."""
         for frame in (self.substances, self.properties, self.activities):
             frame.unpersist()
-
-    def drop_bucket2(self) -> None:
-        """Reclaim the bucket2 materialization: drop the nonce'd catalog
-        table and delete its data directory. AFTER this the ``activities``
-        frame can no longer be recomputed (its scan reads the dropped
-        table) — call only once the result is fully consumed. No-op for
-        non-bucket2 results; idempotent."""
-        if not self.bucket2_table:
-            return
-        import shutil as _shutil
-
-        self.activities.sparkSession.sql(
-            f"DROP TABLE IF EXISTS {self.bucket2_table}"
-        )
-        if self.bucket2_path:
-            _shutil.rmtree(self.bucket2_path, ignore_errors=True)
-        self.bucket2_table = self.bucket2_path = None
-
-
-def harmonize_bucket2_gc(spark: SparkSession,
-                         bucket2_dir: str | None = None) -> list[str]:
-    """Garbage-collect stale bucket2 materializations (r8 verdict task 3).
-
-    Each ``rekey_strategy='bucket2'`` invocation owns a nonce'd catalog
-    table (``__harmonize_b2_<dirhash>_<pid>_<seq>``) for its result's
-    lifetime — correct (nothing may drop a table a lazy frame still
-    reads), but a long-lived session invoking bucket2 in a loop
-    accumulates tables and data dirs. This opt-in helper drops the
-    tables (and deletes their data dirs) that provably cannot be read
-    anymore:
-
-    * the owning PROCESS is dead (nonce pid no longer exists — no lazy
-      frame from that process can survive it), or
-    * the DATA DIR is already gone (the documented manual cleanup —
-      deleting bucket2_dir — leaves dangling catalog entries behind;
-      any read would fail regardless, r8 ADVICE).
-
-    Tables owned by the CURRENT process with live data are never touched
-    — this process's unconsumed results stay safe; use
-    :meth:`HarmonizeResult.drop_bucket2` for those. ``bucket2_dir``
-    restricts the sweep to tables created for that dir (matched by the
-    dir-hash prefix in the name); default sweeps every ``__harmonize_b2_``
-    table in the current catalog/database. Returns the dropped names.
-    """
-    import hashlib as _hashlib
-    import os as _os
-    import shutil as _shutil
-
-    prefix = "__harmonize_b2_"
-    if bucket2_dir:
-        prefix += _hashlib.md5(bucket2_dir.encode()).hexdigest()[:10] + "_"
-    dropped: list[str] = []
-    for t in spark.catalog.listTables():
-        if not t.name.startswith(prefix):
-            continue
-        parts = t.name.rsplit("_", 2)  # ..._<pid>_<seq>
-        try:
-            pid = int(parts[-2])
-        except (IndexError, ValueError):
-            continue  # not a nonce'd name we minted; leave it
-        try:
-            _os.kill(pid, 0)
-            alive = True
-        except ProcessLookupError:
-            alive = False
-        except PermissionError:  # exists, owned by another user
-            alive = True
-        # location from the catalog, normalized to a local path
-        loc = spark.sql(
-            f"DESCRIBE FORMATTED {t.name}"
-        ).where("col_name = 'Location'").collect()
-        path = loc[0].data_type if loc else None
-        if path and path.startswith("file:"):
-            path = path[5:]
-        path_gone = path is not None and not _os.path.isdir(path)
-        if alive and not path_gone:
-            # provably-readable (owner may hold a lazy frame) — includes
-            # every live table of the CURRENT process (own pid is alive)
-            continue
-        spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-        if path:
-            _shutil.rmtree(path, ignore_errors=True)
-        dropped.append(t.name)
-    return dropped
 
 
 def _harmonize_dim(spark: SparkSession, glob: str, sources: list[str],
@@ -196,10 +90,8 @@ def harmonize(
     derive_smiles: bool = True,
     check_invariants: bool = True,
     min_rows: tuple[int, int, int] = (0, 0, 0),
-    early_activity_distinct: bool = False,
     rekey_strategy: str = "auto",
     staging_tables: dict[str, str] | None = None,
-    bucket2_dir: str | None = None,
 ) -> HarmonizeResult:
     """Run the harmonize plan; returns the three brick DataFrames (lazy,
     unless ``scratch_dir`` is given — then dims are checkpointed like the
@@ -215,18 +107,6 @@ def harmonize(
     path for corpora whose id maps outgrow broadcast — shuffle-hash joins
     with the map as build side (no sort, no broadcast build); pair with
     staging written bucketed by (source, sid) to drop the map-side exchange.
-    ``'bucket2'``: ``'bucket'`` plus the sid-rekeyed intermediate is
-    MATERIALIZED as a catalog table bucketed by (source, pid) (requires
-    ``bucket2_dir`` — deliberately NOT ``scratch_dir``, which is the
-    orthogonal dim-checkpoint knob and would confound any bucket-vs-
-    bucket2 measurement), so the pid re-key join ALSO reads its fact
-    side with zero exchanges — the fact table never enters an in-flight
-    shuffle in either re-key. The trade is one full write+read of the
-    fact bytes for one avoided shuffle of the same bytes; measured at
-    sf0.1 it does NOT pay on a single node (SCALE.md "bucketed
-    harmonize"), but the path exists for deployments where the
-    intermediate is reused downstream or shuffle capacity, not IO, is
-    the binding constraint.
 
     ``staging_tables``: {'substances': name, 'properties': name,
     'activities': name} catalog tables to read INSTEAD of the provenance
@@ -237,16 +117,13 @@ def harmonize(
     join reads the fact side with ZERO exchanges — the bucketed scan's
     output partitioning satisfies the join's required distribution
     (proven end-to-end in tests/test_bucketing.py).
+
+    With ``check_invariants`` every data-quality gate that fails raises
+    :class:`InvariantError`.
     """
-    if rekey_strategy not in ("auto", "bucket", "bucket2"):
+    if rekey_strategy not in ("auto", "bucket"):
         raise ValueError(
-            f"rekey_strategy must be 'auto', 'bucket' or 'bucket2', "
-            f"got {rekey_strategy!r}"
-        )
-    if rekey_strategy == "bucket2" and not bucket2_dir:
-        raise ValueError(
-            "rekey_strategy='bucket2' materializes the sid-rekeyed "
-            "intermediate and needs bucket2_dir"
+            f"rekey_strategy must be 'auto' or 'bucket', got {rekey_strategy!r}"
         )
     if staging_tables:
         unknown = set(staging_tables) - {"substances", "properties", "activities"}
@@ -287,7 +164,7 @@ def harmonize(
         # provenance here, and the joins would silently drop those rows (the
         # reference's post-hoc check at 80:100-101 has this blind spot; we
         # close it). Submitted from a driver thread so this map-side count
-        # overlaps the main job's scan instead of gating it — the assert
+        # overlaps the main job's scan instead of gating it — the check
         # fires before anything is returned, so a violation still aborts.
         from concurrent.futures import ThreadPoolExecutor
 
@@ -298,19 +175,15 @@ def harmonize(
         _null_pool.shutdown(wait=False)
     # the reference distincts immediately after the scan (80:67); the final
     # distinct after aid derivation subsumes it (all derivations are
-    # deterministic row-functions), so the default skips this extra full
-    # shuffle (-2 s at sf0.1). Enable for staging areas with heavy duplicate
-    # ratios, where early dedup shrinks the join input.
-    acts = acts_raw.distinct() if early_activity_distinct else acts_raw
-    # binary_value is derived AFTER the final dedup shuffle (see below,
-    # r10) — deriving it here carried 4 redundant bytes/row through both
-    # re-key joins, the bucket2 materialization write+read, and the
-    # distinct exchange.
+    # deterministic row-functions), so this skips that extra full shuffle
+    # (-2 s at sf0.1). binary_value is derived AFTER the final dedup
+    # shuffle (see below, r10) — deriving it here carried 4 redundant
+    # bytes/row through both re-key joins and the distinct exchange.
 
     # re-key: local (source, sid/pid) -> global md5 ids (80:76-78).
     sid_map = subs.select("source", F.col("sid").alias("__localsid"), "newsid").distinct()
     pid_map = props.select("source", F.col("pid").alias("__localpid"), "newpid").distinct()
-    if rekey_strategy in ("bucket", "bucket2"):
+    if rekey_strategy == "bucket":
         # pre-bucket path: both joins are shuffle-hash with the map as the
         # build side — no sort of the fact table, no broadcast build, works
         # at any map cardinality. Staging written bucketed by (source, sid)
@@ -320,52 +193,11 @@ def harmonize(
         sid_map = size_gated_broadcast(sid_map)
         pid_map = size_gated_broadcast(pid_map)
     acts = (
-        acts.withColumnRenamed("sid", "__localsid")
+        acts_raw.withColumnRenamed("sid", "__localsid")
         .withColumnRenamed("pid", "__localpid")
         .join(sid_map, on=["source", "__localsid"], how="inner")
         .drop("__localsid")
-    )
-    if rekey_strategy == "bucket2":
-        # materialize the sid-rekeyed fact bucketed on the PID re-key key:
-        # the read-back scan's output partitioning satisfies the pid
-        # join's required distribution, so the fact side never enters an
-        # in-flight exchange in either re-key — the pid side is proven in
-        # tests/test_bucketing.py::test_harmonize_bucket2_pid_rekey_zero_fact_exchange,
-        # the sid side by the 'bucket' e2e test (bucket2 shares that
-        # subplan up to this write).
-        # The bucketed write itself needs no shuffle (each task fans its
-        # rows into per-bucket files). Table name and data subpath carry a
-        # per-invocation nonce ON TOP of the bucket2_dir scope: dir-scoping
-        # keeps concurrent runs with separate dirs from racing, and the
-        # nonce keeps a LATER run with the SAME dir from dropping/
-        # overwriting a table an earlier (still-lazy, unconsumed) result
-        # frame reads — each invocation owns its table for its lifetime.
-        # Lifecycle (r9): the result tracks its table + data path —
-        # HarmonizeResult.drop_bucket2() reclaims them once consumed, and
-        # harmonize_bucket2_gc() sweeps materializations whose owning
-        # process died or whose data dir was deleted out from under the
-        # catalog entry.
-        import hashlib as _hashlib
-        import os as _os
-
-        n_buckets = _bucket2_n_buckets(spark)
-        nonce = f"{_os.getpid()}_{next(_B2_COUNTER)}"
-        tbl = "__harmonize_b2_" + _hashlib.md5(
-            bucket2_dir.encode()
-        ).hexdigest()[:10] + f"_{nonce}"
-        b2_path = f"{bucket2_dir}/bucket2_sid_rekeyed_{nonce}"
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
-            acts.write.mode("overwrite")
-            .bucketBy(n_buckets, "source", "__localpid")
-            .option("path", b2_path)
-            .saveAsTable(tbl)
-        )
-        acts = spark.table(tbl)
-    else:
-        tbl = b2_path = None
-    acts = (
-        acts.join(pid_map, on=["source", "__localpid"], how="inner")
+        .join(pid_map, on=["source", "__localpid"], how="inner")
         .drop("__localpid")
         .withColumnRenamed("newsid", "sid")
         .withColumnRenamed("newpid", "pid")
@@ -381,10 +213,9 @@ def harmonize(
     # so distinct-then-derive ≡ the reference's derive-then-distinct,
     # 80:83-84), binary_value is derived AFTER distinct too (r10: a pure
     # function of value, which IS in the distinct key, so the groups are
-    # unchanged — this drops it from the re-key joins, the bucket2
-    # write+read and this exchange; guide §2.3 "narrower types"), and
-    # smiles joins AFTER distinct (pure function of inchi, so it can't
-    # split groups). Keeps ~60 bytes/row of derived strings out of the
+    # unchanged — this drops it from the re-key joins and this exchange;
+    # guide §2.3 "narrower types"), and smiles joins AFTER distinct (pure
+    # function of inchi, so it can't split groups). Keeps ~60 bytes/row of derived strings out of the
     # biggest exchange, and the smiles broadcast build no longer gates
     # the shuffle map stage.
     acts = (
@@ -425,14 +256,14 @@ def harmonize(
             registered_persist(frame)
         _assert_invariants(substances, properties, acts, sources, min_rows)
         n_null = null_prov_future.result()
-        assert n_null == 0, (
-            f"{n_null} staged activity rows have unresolvable provenance "
-            f"(staging dir not in declared sources {sources})"
-        )
+        if n_null != 0:
+            raise InvariantError(
+                f"{n_null} staged activity rows have unresolvable provenance "
+                f"(staging dir not in declared sources {sources})"
+            )
 
     return HarmonizeResult(substances=substances, properties=properties,
-                           activities=acts, bucket2_table=tbl,
-                           bucket2_path=b2_path)
+                           activities=acts)
 
 
 def _assert_invariants(substances, properties, activities, sources, min_rows):
@@ -499,19 +330,21 @@ def _assert_invariants(substances, properties, activities, sources, min_rows):
     with ThreadPoolExecutor(max_workers=4) as pool:
         fs, fp, fa, fri = (pool.submit(f) for f in (_s, _p, _a, _ri))
         s, p, a, ri = fs.result(), fp.result(), fa.result(), fri.result()
-    assert s.n > min_rows[0], f"substances {s.n} <= floor {min_rows[0]}"
-    assert p.n > min_rows[1], f"properties {p.n} <= floor {min_rows[1]}"
-    assert a.n > min_rows[2], f"activities {a.n} <= floor {min_rows[2]}"
-    assert a.bad_src == 0, (
-        f"{a.bad_src} activities with undeclared/unresolvable sources"
-    )
-    assert s.bad_src == 0, (
-        f"{s.bad_src} substances with undeclared/unresolvable sources"
-    )
-    assert p.bad_src == 0, (
-        f"{p.bad_src} properties with undeclared/unresolvable sources"
-    )
-    # pid <-> data bijection: one canonical payload per pid (80:104-105)
-    assert p.n_pid == p.n_pd, "pid collision: same pid maps to different data"
-    assert ri.orphan_s == 0, f"{ri.orphan_s} activities with unknown sid"
-    assert ri.orphan_p == 0, f"{ri.orphan_p} activities with unknown pid"
+    checks = [
+        (s.n > min_rows[0], f"substances {s.n} <= floor {min_rows[0]}"),
+        (p.n > min_rows[1], f"properties {p.n} <= floor {min_rows[1]}"),
+        (a.n > min_rows[2], f"activities {a.n} <= floor {min_rows[2]}"),
+        (a.bad_src == 0,
+         f"{a.bad_src} activities with undeclared/unresolvable sources"),
+        (s.bad_src == 0,
+         f"{s.bad_src} substances with undeclared/unresolvable sources"),
+        (p.bad_src == 0,
+         f"{p.bad_src} properties with undeclared/unresolvable sources"),
+        # pid <-> data bijection: one canonical payload per pid (80:104-105)
+        (p.n_pid == p.n_pd, "pid collision: same pid maps to different data"),
+        (ri.orphan_s == 0, f"{ri.orphan_s} activities with unknown sid"),
+        (ri.orphan_p == 0, f"{ri.orphan_p} activities with unknown pid"),
+    ]
+    for ok, msg in checks:
+        if not ok:
+            raise InvariantError(msg)

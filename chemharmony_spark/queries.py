@@ -827,10 +827,10 @@ def q52_repetition_filters(spark, sf):
 
 
 def q53_grouped_topk(spark, sf):
-    """Per-group top-k (two-phase): the 3 highest-value orders per customer
-    nation. Nation cardinality is tiny (25), so the naive per-group window
-    would funnel all orders through 25 tasks — grouped_topk(two_phase=True)
-    pre-filters within (group, input-partition) first (see core.py)."""
+    """Per-group top-k: the 3 highest-value orders per customer nation.
+    Nation cardinality is tiny (25); the planner's partial per-group limit
+    before the exchange keeps the window from funnelling all orders through
+    25 tasks (see grouped_topk in core.py)."""
     from chemharmony_spark.operators.core import grouped_topk
 
     cust = _t(spark, sf, "customer").select("c_custkey", "c_nationkey")
@@ -845,7 +845,6 @@ def q53_grouped_topk(spark, sf):
         ["n_name"],
         [F.col("o_totalprice").desc(), F.col("o_orderkey")],
         k=3,
-        two_phase=True,
     )
     return top.select("n_name", "o_orderkey", "o_totalprice", "rank")
 

@@ -150,84 +150,6 @@ def test_harmonize_e2e_bucketed_staging_fact_side_zero_exchange(spark, warehouse
             spark.sql(f"DROP TABLE IF EXISTS {n}")
 
 
-def test_harmonize_bucket2_pid_rekey_zero_fact_exchange(spark, warehouse, tmp_path):
-    """r7 (VERDICT next-round 5): rekey_strategy='bucket2' materializes the
-    sid-rekeyed fact bucketed by (source, pid), so the SECOND re-key join
-    also reads its fact side with zero exchanges (the sid join's zero
-    fact-side exchange is proven by the e2e test above — bucket2 shares
-    that exact subplan up to the write). Rows must match the auto path."""
-    from pyspark.sql import functions as F2
-
-    from chemharmony_spark.plans.harmonize import harmonize
-
-    subs = spark.range(0, 50).select(
-        F2.concat(F2.lit("src"), (F2.col("id") % 2).cast("string")).alias("source"),
-        F2.col("id").cast("string").alias("sid"),
-        F2.to_json(F2.struct(F2.col("id").alias("x"))).alias("data"),
-    )
-    props = spark.range(0, 20).select(
-        F2.concat(F2.lit("src"), (F2.col("id") % 2).cast("string")).alias("source"),
-        F2.col("id").cast("string").alias("pid"),
-        F2.to_json(F2.struct(F2.col("id").alias("y"))).alias("data"),
-    )
-    acts = spark.range(0, 500).select(
-        F2.concat(F2.lit("src"), (F2.col("id") % 2).cast("string")).alias("source"),
-        (F2.col("id") % 50).cast("string").alias("sid"),
-        (F2.col("id") % 20).cast("string").alias("pid"),
-        F2.concat(F2.lit("InChI=1S/C"), (F2.col("id") % 20).cast("string")).alias("inchi"),
-        F2.when(F2.col("id") % 3 == 0, "positive").otherwise("negative").alias("value"),
-    )
-    for n in ("b2_acts", "b2_subs", "b2_props"):
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
-    write_parquet(acts, f"{warehouse}/b2_acts",
-                  bucket_by=(8, ["source", "sid"]), table_name="b2_acts")
-    write_parquet(subs, f"{warehouse}/b2_subs",
-                  bucket_by=(8, ["source", "sid"]), table_name="b2_subs")
-    write_parquet(props, f"{warehouse}/b2_props",
-                  bucket_by=(8, ["source", "pid"]), table_name="b2_props")
-    glob_root = f"{warehouse}/b2_glob"
-    for src in ("src0", "src1"):
-        for name, df in (("substances", subs), ("properties", props),
-                         ("activities", acts)):
-            df.where(F2.col("source") == src).drop("source").write.mode(
-                "overwrite"
-            ).parquet(f"{glob_root}/{src}/{name}.parquet")
-    prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        res = harmonize(
-            spark, "/nonexistent", ["src0", "src1"], check_invariants=False,
-            rekey_strategy="bucket2", bucket2_dir=str(tmp_path / "b2_scratch"),
-            staging_tables={"substances": "b2_subs",
-                            "properties": "b2_props",
-                            "activities": "b2_acts"},
-        )
-        plan = res.activities._jdf.queryExecution().executedPlan().toString()
-        # the pid re-key join streams the bucketed intermediate directly
-        fact_side = _streamed_subtree(plan, "ShuffledHashJoin", "__localpid#")
-        assert any("__harmonize_b2_" in line for line in fact_side), (
-            "pid re-key join's streamed side is not the materialized "
-            "intermediate:\n" + plan
-        )
-        assert not any("Exchange" in line for line in fact_side), (
-            "bucket2 fact side still shuffles into the pid re-key join:\n"
-            + plan
-        )
-        got = sorted(
-            map(tuple, res.activities.drop("aid", "smiles").collect())
-        )
-        auto = harmonize(spark, glob_root, ["src0", "src1"],
-                         check_invariants=False)
-        want = sorted(
-            map(tuple, auto.activities.drop("aid", "smiles").collect())
-        )
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
-        for n in ("b2_acts", "b2_subs", "b2_props"):
-            spark.sql(f"DROP TABLE IF EXISTS {n}")
-
-
 def test_harmonize_staging_tables_undeclared_source_aborts(spark, warehouse):
     """r7 ADVICE: a catalog table STORES its source column, so an
     undeclared value used to flow silently into the substances brick
@@ -305,174 +227,3 @@ def test_harmonize_rekey_shape_cobucketed_composite_key(spark, warehouse):
         )
         spark.sql("DROP TABLE IF EXISTS acts_ck")
         spark.sql("DROP TABLE IF EXISTS sidmap_ck")
-
-
-def _tiny_glob_staging(spark, root: str) -> None:
-    from pyspark.sql import functions as F2
-
-    subs = spark.range(0, 20).select(
-        F2.col("id").cast("string").alias("sid"),
-        F2.to_json(F2.struct(F2.col("id").alias("x"))).alias("data"),
-    )
-    props = spark.range(0, 5).select(
-        F2.col("id").cast("string").alias("pid"),
-        F2.to_json(F2.struct(F2.col("id").alias("y"))).alias("data"),
-    )
-    acts = spark.range(0, 100).select(
-        (F2.col("id") % 20).cast("string").alias("sid"),
-        (F2.col("id") % 5).cast("string").alias("pid"),
-        F2.concat(F2.lit("InChI=1S/C"), (F2.col("id") % 5).cast("string")).alias("inchi"),
-        F2.when(F2.col("id") % 3 == 0, "positive").otherwise("negative").alias("value"),
-    )
-    for name, df in (("substances", subs), ("properties", props),
-                     ("activities", acts)):
-        df.write.mode("overwrite").parquet(f"{root}/src0/{name}.parquet")
-
-
-def test_harmonize_bucket2_reinvocation_keeps_earlier_result_live(
-    spark, tmp_path
-):
-    """r8 ADVICE: bucket2 returns a LAZY frame reading its materialized
-    table; re-invoking with the SAME bucket2_dir must not drop/overwrite
-    that table while the earlier result is unconsumed. The per-invocation
-    nonce in the table name + data subpath makes each run's
-    materialization private — the first result must still collect
-    correctly AFTER the second run writes."""
-    import os
-
-    from chemharmony_spark.plans.harmonize import harmonize
-
-    glob_root = str(tmp_path / "staging")
-    _tiny_glob_staging(spark, glob_root)
-    b2_dir = str(tmp_path / "b2_shared")
-    res1 = harmonize(spark, glob_root, ["src0"], check_invariants=False,
-                     rekey_strategy="bucket2", bucket2_dir=b2_dir)
-    res2 = harmonize(spark, glob_root, ["src0"], check_invariants=False,
-                     rekey_strategy="bucket2", bucket2_dir=b2_dir)
-    # two distinct materializations exist under the shared dir
-    subdirs = [d for d in os.listdir(b2_dir)
-               if d.startswith("bucket2_sid_rekeyed")]
-    assert len(subdirs) == 2, subdirs
-    # the EARLIER result is consumed LAST and must still read its own data
-    n2 = res2.activities.count()
-    n1 = res1.activities.count()
-    assert n1 == n2 > 0
-
-
-def test_bucket2_n_buckets_falls_back_on_non_numeric_conf(spark):
-    """r8 ADVICE: managed platforms can expose non-numeric
-    spark.sql.shuffle.partitions (e.g. "auto"); the bucket2 path must
-    degrade to defaultParallelism instead of crashing before its write."""
-    from chemharmony_spark.plans.harmonize import _bucket2_n_buckets
-
-    class _FakeConf:
-        def __init__(self, value):
-            self._v = value
-
-        def get(self, key):
-            return self._v
-
-    class _FakeSpark:
-        def __init__(self, value, parallelism):
-            self.conf = _FakeConf(value)
-            self.sparkContext = type(
-                "SC", (), {"defaultParallelism": parallelism}
-            )()
-
-    assert _bucket2_n_buckets(_FakeSpark("64", 8)) == 64
-    assert _bucket2_n_buckets(_FakeSpark("auto", 8)) == 8
-    assert _bucket2_n_buckets(_FakeSpark(None, 8)) == 8
-    # and the real session resolves to a positive int
-    assert _bucket2_n_buckets(spark) > 0
-
-
-def test_harmonize_result_drop_bucket2_reclaims_table_and_path(
-    spark, tmp_path
-):
-    """r9 (r8 verdict task 3 / ADVICE): the result TRACKS its bucket2
-    materialization and drop_bucket2() reclaims both the catalog table and
-    the data dir once the result is consumed — idempotently, and as a
-    no-op on non-bucket2 results."""
-    import os
-
-    from chemharmony_spark.plans.harmonize import harmonize
-
-    glob_root = str(tmp_path / "staging")
-    _tiny_glob_staging(spark, glob_root)
-    res = harmonize(spark, glob_root, ["src0"], check_invariants=False,
-                    rekey_strategy="bucket2",
-                    bucket2_dir=str(tmp_path / "b2"))
-    assert res.bucket2_table and res.bucket2_table.startswith("__harmonize_b2_")
-    assert res.bucket2_path and os.path.isdir(res.bucket2_path)
-    assert spark.catalog.tableExists(res.bucket2_table)
-    assert res.activities.count() > 0  # consume, then reclaim
-    tbl, path = res.bucket2_table, res.bucket2_path
-    res.drop_bucket2()
-    assert not spark.catalog.tableExists(tbl)
-    assert not os.path.exists(path)
-    assert res.bucket2_table is None and res.bucket2_path is None
-    res.drop_bucket2()  # idempotent
-
-    auto = harmonize(spark, glob_root, ["src0"], check_invariants=False)
-    assert auto.bucket2_table is None
-    auto.drop_bucket2()  # no-op on the auto path
-
-
-def _dead_pid() -> int:
-    import os
-
-    pid = 4194000  # near the default pid_max ceiling; scan down to a hole
-    while os.path.exists(f"/proc/{pid}"):
-        pid -= 1
-    return pid
-
-
-def test_harmonize_bucket2_gc_drops_dead_and_dangling_only(spark, tmp_path):
-    """r8 verdict task 3: harmonize_bucket2_gc sweeps materializations
-    whose owning pid is dead or whose data dir is gone, and REFUSES to
-    touch the current process's live tables (an unconsumed lazy result
-    may still read them)."""
-    import hashlib
-    import os
-    import shutil
-
-    from chemharmony_spark.plans.harmonize import (
-        harmonize,
-        harmonize_bucket2_gc,
-    )
-
-    glob_root = str(tmp_path / "staging")
-    _tiny_glob_staging(spark, glob_root)
-    b2_dir = str(tmp_path / "b2")
-    live = harmonize(spark, glob_root, ["src0"], check_invariants=False,
-                     rekey_strategy="bucket2", bucket2_dir=b2_dir)
-    # a stale table from a DEAD process: same dir-hash prefix, dead pid
-    prefix = hashlib.md5(b2_dir.encode()).hexdigest()[:10]
-    stale_tbl = f"__harmonize_b2_{prefix}_{_dead_pid()}_0"
-    stale_path = f"{b2_dir}/bucket2_sid_rekeyed_stale"
-    spark.sql(f"DROP TABLE IF EXISTS {stale_tbl}")
-    spark.range(3).write.option("path", stale_path).saveAsTable(stale_tbl)
-    # a DANGLING table from THIS process: catalog entry whose data dir the
-    # caller already rmtree'd (the documented manual cleanup)
-    dang = harmonize(spark, glob_root, ["src0"], check_invariants=False,
-                     rekey_strategy="bucket2", bucket2_dir=b2_dir)
-    shutil.rmtree(dang.bucket2_path)
-
-    dropped = harmonize_bucket2_gc(spark, b2_dir)
-    assert sorted(dropped) == sorted([stale_tbl, dang.bucket2_table])
-    assert not spark.catalog.tableExists(stale_tbl)
-    assert not os.path.exists(stale_path)
-    assert not spark.catalog.tableExists(dang.bucket2_table)
-    # the live table survives (this process could still read it) ...
-    assert spark.catalog.tableExists(live.bucket2_table)
-    assert live.activities.count() > 0
-    # ... and a dir-scoped sweep ignores tables of OTHER bucket2 dirs
-    other = harmonize(spark, glob_root, ["src0"], check_invariants=False,
-                      rekey_strategy="bucket2",
-                      bucket2_dir=str(tmp_path / "b2_other"))
-    shutil.rmtree(other.bucket2_path)
-    assert harmonize_bucket2_gc(spark, b2_dir) == []
-    assert spark.catalog.tableExists(other.bucket2_table)
-    # the unscoped sweep picks the dangling other-dir table up
-    assert other.bucket2_table in harmonize_bucket2_gc(spark)
-    live.drop_bucket2()

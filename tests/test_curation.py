@@ -73,20 +73,27 @@ def test_stopword_ratio(spark):
     assert "the" in EN_STOPWORDS
 
 
-def test_grouped_topk_two_phase_matches_one_phase(spark, sf_dir):
+def test_grouped_topk_matches_python_sort(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice",
         (F.col("o_custkey") % 5).alias("grp"),
-    ).repartition(7)  # several input partitions so phase 1 actually salts
+    ).repartition(7)  # several input partitions feed each group's limit
     order = [F.col("o_totalprice").desc(), F.col("o_orderkey")]
-    one = grouped_topk(orders, ["grp"], order, k=4, two_phase=False)
-    two = grouped_topk(orders, ["grp"], order, k=4, two_phase=True)
+    top = grouped_topk(orders, ["grp"], order, k=4)
     key = ["grp", "rank", "o_orderkey"]
-    assert sorted(map(tuple, one.select(key).collect())) == \
-        sorted(map(tuple, two.select(key).collect()))
+    by_grp: dict = {}
+    for r in orders.collect():
+        by_grp.setdefault(r["grp"], []).append(r)
+    expected = sorted(
+        (g, i + 1, r["o_orderkey"])
+        for g, rows in by_grp.items()
+        for i, r in enumerate(sorted(
+            rows, key=lambda r: (-r["o_totalprice"], r["o_orderkey"]))[:4])
+    )
+    assert sorted(map(tuple, top.select(key).collect())) == expected
     # exactly k rows per group, ranks 1..k
     per = {r["grp"]: r["n"] for r in
-           two.groupBy("grp").agg(F.count("*").alias("n")).collect()}
+           top.groupBy("grp").agg(F.count("*").alias("n")).collect()}
     assert all(n == 4 for n in per.values())
 
 

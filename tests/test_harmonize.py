@@ -105,3 +105,35 @@ def test_heterogeneous_staging_schemas_keep_numvalue(spark, tmp_path):
     assert "numvalue" in res.activities.columns
     vals = {r.source: r.numvalue for r in res.activities.collect()}
     assert vals["srcB"] == 42.5 and vals["srcA"] is None
+
+
+def test_invariant_gate_survives_python_O(staging_fixture):
+    """The data-quality gates raise InvariantError explicitly, so running
+    under ``python -O`` (which strips ``assert``) still aborts on staging
+    with an undeclared source dir (srcC here)."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = str(Path(__file__).resolve().parent.parent)
+    code = f"""
+import sys
+sys.path.insert(0, {repo!r})
+assert False, "not running under -O"
+from chemharmony_spark.plans.harmonize import InvariantError, harmonize
+from chemharmony_spark.session import get_spark
+
+spark = get_spark(app_name="harmonize-O", shuffle_partitions=2)
+try:
+    harmonize(spark, {str(staging_fixture)!r}, ["srcA", "srcB"])
+except InvariantError as e:
+    print("InvariantError:", e)
+    sys.exit(0)
+sys.exit(3)
+"""
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="1g")
+    proc = subprocess.run([sys.executable, "-O", "-c", code], env=env,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+    assert "unresolvable" in proc.stdout

@@ -98,8 +98,10 @@ def test_harmonize_bucket_strategy_matches_auto(spark, staging_fixture, tiny_thr
 
 
 def test_harmonize_rejects_unknown_strategy(spark, staging_fixture):
-    with pytest.raises(ValueError, match="rekey_strategy"):
-        harmonize(spark, staging_fixture, SOURCES, rekey_strategy="cartesian")
+    # 'bucket2' (the materializing strategy) was deleted; it is unknown now
+    for strategy in ("cartesian", "bucket2"):
+        with pytest.raises(ValueError, match="rekey_strategy"):
+            harmonize(spark, staging_fixture, SOURCES, rekey_strategy=strategy)
 
 
 def test_gate_declines_unknown_stats(spark):

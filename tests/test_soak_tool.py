@@ -1,6 +1,6 @@
 """The scaling-soak tool's harmonize entries (r8): the SPECIAL wiring —
 untimed fixture prep populating the per-dir cache, runners returning the
-harmonized activities frame for both re-key paths — must keep working
+harmonized activities frame for the bucketed re-key path — must keep working
 against bench's staging fixtures, or the soak rows in SCALE.md stop
 being reproducible."""
 
@@ -25,8 +25,6 @@ def test_soak_harmonize_entries_prepare_and_run(spark, sf_dir, tmp_path,
     shutil.copytree(sf_dir, data_dir)
 
     prep_b, run_b = soak.SPECIAL["harmonize_bucket"]
-    prep_b2, run_b2 = soak.SPECIAL["harmonize_bucket2"]
-    assert prep_b is prep_b2  # one shared staging/table fixture
 
     prep_b(spark, data_dir, 9901.0)
     assert data_dir in soak._HB_PREPARED
@@ -35,24 +33,10 @@ def test_soak_harmonize_entries_prepare_and_run(spark, sf_dir, tmp_path,
                                        "properties"}
     try:
         n_bucket = run_b(spark, data_dir).count()
-        n_bucket2 = run_b2(spark, data_dir).count()
-        assert n_bucket == n_bucket2 > 0  # same harmonize, different re-key
-        # r9 (r8 ADVICE): the bucket2 runner tracks its materialization and
-        # the post-entry cleanup hook reclaims scratch dir + catalog table
-        assert len(soak._B2_LIVE) == 1
-        b2_tbl = soak._B2_LIVE[0][0].bucket2_table
-        scratch = f"{data_dir}_b2_scratch"
-        import os
-
-        assert os.path.isdir(scratch) and spark.catalog.tableExists(b2_tbl)
-        soak.SPECIAL_CLEANUP["harmonize_bucket2"](spark)
-        assert not soak._B2_LIVE
-        assert not os.path.exists(scratch)
-        assert not spark.catalog.tableExists(b2_tbl)
+        assert n_bucket > 0
     finally:
         from chemharmony_spark.cache import release_caches
 
         release_caches()
-        soak.SPECIAL_CLEANUP["harmonize_bucket2"](spark)
         for t in tables.values():
             spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -1,13 +1,19 @@
 """Dump .explain("formatted") for every bench entry into plans/<tag>/.
 
 Usage: python tools/dump_plans.py <tag> [suffix] [name ...]
+       python tools/dump_plans.py --compare <dir> <suffix_a> <suffix_b>
 
 Writes plans/<tag>/<query>_<suffix>.txt (suffix defaults to "before") for
-each headline bench query plus the three harmonize entries. Plan capture is
+each headline bench query plus the two harmonize entries. Plan capture is
 driver-side only — nothing executes — so the dump is safe to run alongside
 other work and the committed files let a reviewer audit plan-shape claims
 (Exchange count, join strategy, PushedFilters, Python eval nodes) without
 running Spark.
+
+``--compare`` checks that every <name>_<suffix_a>.txt in <dir> has the same
+plan as its <name>_<suffix_b>.txt once expression and plan ids (which
+differ from session to session) are blanked; it prints one line per pair
+and exits 1 if any pair differs or is missing.
 
 The harmonize plans are captured with check_invariants=False: the invariant
 suite's persists would otherwise wrap the analytic plan in
@@ -19,6 +25,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -34,7 +41,35 @@ def formatted_plan(df) -> str:
     return buf.getvalue()
 
 
+_IDS = re.compile(r"(#|plan_id=)\d+")
+
+
+def strip_ids(plan: str) -> str:
+    """``plan`` with expression ids (``sid#99``) and plan ids blanked."""
+    return _IDS.sub(r"\1", plan)
+
+
+def compare(plan_dir: str, suffix_a: str, suffix_b: str) -> int:
+    root = Path(plan_dir)
+    tail = f"_{suffix_a}.txt"
+    differ = 0
+    for a in sorted(root.glob(f"*{tail}")):
+        name = a.name[: -len(tail)]
+        b = root / f"{name}_{suffix_b}.txt"
+        if not b.exists():
+            verdict = "missing"
+        elif strip_ids(a.read_text()) == strip_ids(b.read_text()):
+            verdict = "identical"
+        else:
+            verdict = "different"
+        differ += verdict != "identical"
+        print(f"{name}: {verdict}")
+    return 1 if differ else 0
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--compare"]:
+        sys.exit(compare(*sys.argv[2:5]))
     tag = sys.argv[1] if len(sys.argv) > 1 else "r09"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3:])
@@ -65,11 +100,9 @@ def main() -> None:
         print(f"wrote {name}_{suffix}.txt")
 
     staging_root = f"/tmp/chemharmony_bench_staging_sf{sf}"
-    hm = {"harmonize_e2e": {},
-          "harmonize_e2e_bucket": None,   # filled below if staging exists
-          "harmonize_e2e_bucket2": None}
+    hm = {"harmonize_e2e", "harmonize_e2e_bucket"}
     if only:
-        hm = {k: v for k, v in hm.items() if k in only}
+        hm &= only
     if hm and os.path.isdir(f"{staging_root}/src1"):
         sources = ["src0", "src1"]
         if "harmonize_e2e" in hm:
@@ -78,8 +111,7 @@ def main() -> None:
             (outdir / f"harmonize_e2e_{suffix}.txt").write_text(
                 formatted_plan(res.activities))
             print(f"wrote harmonize_e2e_{suffix}.txt")
-        want_bucket = [k for k in ("harmonize_e2e_bucket",) if k in hm]
-        if want_bucket:
+        if "harmonize_e2e_bucket" in hm:
             tables = bench._prepare_bucketed_staging(
                 spark, staging_root, sources, sf)
             res = harmonize(spark, staging_root, sources,
@@ -88,20 +120,6 @@ def main() -> None:
             (outdir / f"harmonize_e2e_bucket_{suffix}.txt").write_text(
                 formatted_plan(res.activities))
             print(f"wrote harmonize_e2e_bucket_{suffix}.txt")
-        # bucket2 materializes mid-plan (a real write); its post-write plan
-        # is the pid-join over the bucketed scan — capturing it would
-        # execute the write, so bucket2 is only dumped on explicit request
-        if "harmonize_e2e_bucket2" in only:
-            tables = bench._prepare_bucketed_staging(
-                spark, staging_root, sources, sf)
-            res = harmonize(spark, staging_root, sources,
-                            check_invariants=False,
-                            rekey_strategy="bucket2", staging_tables=tables,
-                            bucket2_dir=f"{staging_root}_b2_scratch")
-            (outdir / f"harmonize_e2e_bucket2_{suffix}.txt").write_text(
-                formatted_plan(res.activities))
-            res.drop_bucket2()
-            print(f"wrote harmonize_e2e_bucket2_{suffix}.txt")
     elif hm:
         print(f"staging {staging_root} missing; run bench once to build it "
               "— harmonize plans skipped")

@@ -213,47 +213,8 @@ def _prepare_harmonize_bucket(spark, data_dir: str, tag: float) -> None:
     _HB_PREPARED[data_dir] = (sources, tables)
 
 
-def _harmonize_bucket2_runner(spark, data_dir: str):
-    """bucket2 variant of the soak entry: same staging/tables, but the
-    sid-rekeyed fact is materialized bucketed by (source, pid) — the
-    recorded-negative-at-bench-scale path; its soak ratio quantifies
-    whether the extra write+read SCALES like the shuffle it replaces.
-    Each invocation's result (owning a nonce'd table + a full fact copy
-    under {data_dir}_b2_scratch) is tracked in ``_B2_LIVE`` so
-    ``_cleanup_bucket2`` can reclaim disk + metastore entries once the
-    entry finishes timing (r8 ADVICE: repeated soaks accumulated 2 fact
-    copies per scale per run with nothing cleaning them)."""
-    sources, tables = _HB_PREPARED[data_dir]
-    from chemharmony_spark.plans.harmonize import harmonize
-
-    res = harmonize(spark, f"{data_dir}_hstage", sources,
-                    rekey_strategy="bucket2",
-                    bucket2_dir=f"{data_dir}_b2_scratch",
-                    staging_tables=tables)
-    _B2_LIVE.append((res, f"{data_dir}_b2_scratch"))
-    return res.activities
-
-
-_B2_LIVE: list = []
-
-
-def _cleanup_bucket2(spark) -> None:
-    """Untimed post-entry cleanup: drop every bucket2 materialization the
-    timing loop created (table + nonce'd subpath, via the result's own
-    drop_bucket2) and remove the scratch dirs wholesale — safe because the
-    timed frames were fully consumed (counted) before cleanup runs."""
-    while _B2_LIVE:
-        res, scratch = _B2_LIVE.pop()
-        res.drop_bucket2()
-        shutil.rmtree(scratch, ignore_errors=True)
-
-
 SPECIAL = {"harmonize_bucket": (_prepare_harmonize_bucket,
-                                _harmonize_bucket_runner),
-           "harmonize_bucket2": (_prepare_harmonize_bucket,
-                                 _harmonize_bucket2_runner)}
-# post-entry cleanup hooks, run OUTSIDE the timed region
-SPECIAL_CLEANUP = {"harmonize_bucket2": _cleanup_bucket2}
+                                _harmonize_bucket_runner)}
 
 
 def main() -> int:
@@ -333,8 +294,6 @@ def main() -> int:
                 best[d] = dt if best[d] is None else min(best[d], dt)
                 raw[d].append(round(dt, 2))
                 release_caches()  # bound cache residency across the soak
-        if name in SPECIAL_CLEANUP:  # untimed: reclaim scratch/tables
-            SPECIAL_CLEANUP[name](spark)
         cals[name] = _calibrate(spark, reps=2)
         ios[name] = _io_probe()
         tb, tk = best[base], best[xk]
